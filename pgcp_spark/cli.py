@@ -200,10 +200,15 @@ def main(argv: list[str] | None = None) -> int:
         num_partitions=args.num_partitions,
         where=args.where,
     )
-    if "*" in args.table or "?" in args.table or "[" in args.table:
-        tr.copy_tables(args.table, options)  # pgcp_runner.rb:27
-    else:
-        tr.copy_table(args.table, None, options)
+    try:
+        if "*" in args.table or "?" in args.table or "[" in args.table:
+            tr.copy_tables(args.table, options)  # pgcp_runner.rb:27
+        else:
+            tr.copy_table(args.table, None, options)
+    finally:
+        # end the clients' connections (the psql client's session pool)
+        tr.src_client.close()
+        tr.dest_client.close()
     return 0
 
 

@@ -19,6 +19,14 @@ reference pipe:
     an explicit NULL marker.
   - FAILURES PROPAGATE: any psql exit ≠ 0 raises (the reference's pipe
     check was broken — ``echo $?`` in a fresh subshell, transport.rb:71-74).
+  - NO PER-STATEMENT PROCESS: the staged ``\\copy`` exports and loads are
+    client-side psql meta-commands, so they run on ``PsqlCliClient``'s
+    pooled long-lived sessions, not one ``psql`` process each. Only the
+    ``make_pipe_*`` transports start their own psql per partition.
+  - NOTHING LEFT BEHIND: the writer removes its ``pgcp_copy_in_*``
+    directory once its loads end; the reader's ``pgcp_copy_out_*``
+    export lives until ``Transport`` calls ``reader.release(df)`` after
+    the staged write that read it, on success and failure alike.
 
 Scale note: the CSV staging directory is local-filesystem here (local
 mode / single node). On a cluster the same design streams per-partition —
@@ -29,6 +37,7 @@ shared directory; the seam (reader/writer callables) stays identical.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
 from glob import glob
@@ -85,64 +94,85 @@ def spark_type_for(pg_type: str) -> str:
 
 
 def make_copy_reader(spark, client: PsqlCliClient):
-    """Build a ``Transport`` reader: parallel COPY TO csv → typed Spark scan."""
+    """Build a ``Transport`` reader: parallel COPY TO csv → typed Spark scan.
+
+    The scan reads its CSV export lazily, so the export directory lives
+    until ``reader.release(df)`` — ``Transport`` calls it once the staged
+    write that consumed ``df`` has finished or failed."""
+    # id(returned DataFrame) → export directory; single dict operations
+    # are atomic, so concurrent glob-copy threads need no lock
+    staged: dict[int, str] = {}
 
     def reader(src: QualifiedName, options):
         columns = cat.column_definitions(client, src.schema_name, src.table_name)
         if not columns:
             raise RuntimeError(f"source table {src} has no columns (missing?)")
         schema = ", ".join(f"`{c.name}` {spark_type_for(c.type)}" for c in columns)
-        out_dir = tempfile.mkdtemp(prefix="pgcp_copy_out_")
-
         selects = _partitioned_selects(client, src, columns, options)
+        out_dir = tempfile.mkdtemp(prefix="pgcp_copy_out_")
 
         def export(i_sql):
             i, sql = i_sql
             path = os.path.join(out_dir, f"part-{i:05d}.csv")
             client.execute(f"\\copy ({sql}) to '{path}' {_COPY_OUT_OPTS}")
 
-        with ThreadPoolExecutor(max_workers=_PARALLELISM) as pool:
-            list(pool.map(export, enumerate(selects)))
-
-        df = spark.read.csv(
-            out_dir,
-            schema=schema,
-            nullValue=_CSV_NULL,
-            emptyValue="",
-            escape='"',  # PG CSV doubles quotes (RFC 4180); Spark defaults to backslash
-            timestampFormat="yyyy-MM-dd HH:mm:ss[.SSSSSS]",
-        )
+        try:
+            with ThreadPoolExecutor(max_workers=_PARALLELISM) as pool:
+                list(pool.map(export, enumerate(selects)))
+            df = spark.read.csv(
+                out_dir,
+                schema=schema,
+                nullValue=_CSV_NULL,
+                emptyValue="",
+                escape='"',  # PG CSV doubles quotes (RFC 4180); Spark defaults to backslash
+                timestampFormat="yyyy-MM-dd HH:mm:ss[.SSSSSS]",
+            )
+        except BaseException:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
         from pyspark.sql import functions as F
 
         for c in columns:
             if c.type.lower() == "boolean":
                 df = df.withColumn(c.name, F.col(c.name) == "t")
+        staged[id(df)] = out_dir
         return df
 
+    def release(df) -> None:
+        """Remove the export directory behind ``df`` (no-op for others)."""
+        out_dir = staged.pop(id(df), None)
+        if out_dir is not None:
+            shutil.rmtree(out_dir, ignore_errors=True)
+
+    reader.release = release
     return reader
 
 
 def make_copy_writer(client: PsqlCliClient):
-    """Build a ``Transport`` writer: Spark CSV parts → parallel COPY FROM."""
+    """Build a ``Transport`` writer: Spark CSV parts → parallel COPY FROM.
+    Its staging directory is removed once the loads end, either way."""
 
     def writer(df, staging: QualifiedName, options) -> None:
         out_dir = tempfile.mkdtemp(prefix="pgcp_copy_in_")
         part_dir = os.path.join(out_dir, "parts")
-        (
-            df.write.mode("overwrite")
-            .option("nullValue", _CSV_NULL)
-            .option("emptyValue", "\"\"")
-            .option("escape", '"')  # RFC 4180 doubled quotes for PG COPY
-            .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .csv(part_dir)
-        )
-        parts = sorted(glob(os.path.join(part_dir, "part-*")))
+        try:
+            (
+                df.write.mode("overwrite")
+                .option("nullValue", _CSV_NULL)
+                .option("emptyValue", "\"\"")
+                .option("escape", '"')  # RFC 4180 doubled quotes for PG COPY
+                .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+                .csv(part_dir)
+            )
+            parts = sorted(glob(os.path.join(part_dir, "part-*")))
 
-        def load(path: str) -> None:
-            client.execute(f"\\copy {staging.quoted} from '{path}' {_COPY_OPTS}")
+            def load(path: str) -> None:
+                client.execute(f"\\copy {staging.quoted} from '{path}' {_COPY_OPTS}")
 
-        with ThreadPoolExecutor(max_workers=_PARALLELISM) as pool:
-            list(pool.map(load, parts))
+            with ThreadPoolExecutor(max_workers=_PARALLELISM) as pool:
+                list(pool.map(load, parts))
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
 
     return writer
 

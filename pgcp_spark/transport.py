@@ -26,7 +26,9 @@ strides, or sampled percentile boundaries for text/uuid/any-orderable
 keys (pg/partition.py, round 13; previously a non-numeric PK degraded to
 one connection). Genuinely small tables keep the single stream (bounded
 LIMIT probe). Multi-table glob fan-out runs copies in a thread pool
-(each Spark job is independent; the scheduler interleaves them).
+(each Spark job is independent; the scheduler interleaves them). Index
+replay adds the primary key first, then builds a table's other indexes
+concurrently (their SHARE locks are compatible).
 """
 
 from __future__ import annotations
@@ -164,14 +166,7 @@ class Transport:
         try:
             self._copy_table_data(src, dest, options)
             if not options.skip_indexes:  # Q3 fixed
-                indexes = self._src_indexes(src)
-                # PG index names are schema-scoped: copying a table under a
-                # NEW name into a schema that already holds a copy of the
-                # original would replay the same index name twice — prefix
-                # with the dest table name to keep replays collision-free
-                prefix = f"{dest.table_name}_" if dest.table_name != src.table_name else None
-                for stmt in ddl.create_index_statements(dest, indexes, rename_prefix=prefix):
-                    self.dest_client.execute(stmt)
+                self._replay_indexes(src, dest)
         except Exception:
             # transport.rb:57-61 semantics — clean up the table we created —
             # but propagate the error instead of swallowing it (Q4 fixed)
@@ -238,6 +233,30 @@ class Transport:
         self.dest_client.execute(ddl.create_table_statement(columns, dest))
         return True
 
+    def _replay_indexes(self, src: QualifiedName, dest: QualifiedName) -> None:
+        """postgres.rb:243-261 (O11). The primary key goes first: ADD
+        PRIMARY KEY takes ACCESS EXCLUSIVE. The other indexes then build
+        at the same time — CREATE INDEX takes SHARE, which does not
+        conflict with itself — each on its own connection when the client
+        pools them (PsqlCliClient; JvmJdbcClient serializes on its lock).
+        All builds finish before the first error, in statement order,
+        propagates."""
+        indexes = self._src_indexes(src)
+        # PG index names are schema-scoped: copying a table under a NEW
+        # name into a schema that already holds a copy of the original
+        # would replay the same index name twice — prefix with the dest
+        # table name to keep replays collision-free
+        prefix = f"{dest.table_name}_" if dest.table_name != src.table_name else None
+        primary = [ix for ix in indexes if ix.primary]
+        secondary = [ix for ix in indexes if not ix.primary]
+        for stmt in ddl.create_index_statements(dest, primary, rename_prefix=prefix):
+            self.dest_client.execute(stmt)
+        stmts = ddl.create_index_statements(dest, secondary, rename_prefix=prefix)
+        if stmts:
+            # leaving the pool waits for every build, even after a failure
+            with ThreadPoolExecutor(max_workers=len(stmts)) as pool:
+                list(pool.map(self.dest_client.execute, stmts))
+
     def _src_columns(self, qn: QualifiedName) -> list[cat.ColumnDef]:
         key = str(qn)
         with self._cat_lock:
@@ -262,7 +281,14 @@ class Transport:
         """transport.rb:128-143 (O9): staging table + COPY + hotswap, with
         the staging table dropped in all failure paths."""
         df = self.reader(src, options)
-        self._staged_write(df, dest, options, src_for_ddl=src)
+        try:
+            self._staged_write(df, dest, options, src_for_ddl=src)
+        finally:
+            # a reader that stages files behind its DataFrame (the CSV
+            # reader, pg/copy_csv.py) frees them once the write is over
+            release = getattr(self.reader, "release", None)
+            if release is not None:
+                release(df)
 
     def _staged_write(
         self,

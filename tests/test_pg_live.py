@@ -8,7 +8,9 @@ psql-CLI client (pg/psql_client.py) and the parallel COPY⇄CSV transfer
 seams (pg/copy_csv.py): catalog introspection, exact-type DDL round-trip,
 staged copy, atomic hotswap, index replay, --where pushdown, glob fan-out,
 and failure cleanup — with assertions, which the reference's own live spec
-(/root/reference/spec/transport_spec.rb:3-32) never had.
+(/root/reference/spec/transport_spec.rb:3-32) never had. The last tests
+pin the psql client's session pool: failure handling, stderr draining,
+session reuse and concurrency, and ``close()``.
 
 Skips cleanly when no postgres toolchain is present.
 """
@@ -107,7 +109,8 @@ FROM generate_series(1, 1000) AS g(i)"""
     )
     c.execute("CREATE TABLE src.pets (id INTEGER PRIMARY KEY, kind TEXT)")
     c.execute("INSERT INTO src.pets SELECT i, 'kind_' || (i % 5) FROM generate_series(1, 50) g(i)")
-    return c
+    yield c
+    c.close()
 
 
 @pytest.fixture()
@@ -188,6 +191,30 @@ def test_live_failure_cleans_created_table(transport, client):
     assert not cat.table_exists(client, "dst", "does_not_exist")
 
 
+def test_live_csv_staging_dirs_are_removed(spark, pg_server, client, tmp_path, monkeypatch):
+    """The CSV transfer's export and load directories go away after the
+    copy, whether the staged write succeeds or fails."""
+    from pgcp_spark.qualified_name import QualifiedName
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    writer = make_copy_writer(client)
+    tr = Transport(
+        spark, pg_server, pg_server, src_client=client, dest_client=client,
+        reader=make_copy_reader(spark, client), writer=writer,
+    )
+    tr.copy_table("src.people", "dst_tmp.people")
+    assert client.fetch("SELECT COUNT(*) FROM dst_tmp.people")[0][0] == 1000
+    assert os.listdir(tmp_path) == []
+
+    def failing_writer(df, staging, options):
+        writer(df, QualifiedName(staging.schema_name, "no_such_staging"), options)
+
+    tr.writer = failing_writer
+    with pytest.raises(RuntimeError, match="no_such_staging"):
+        tr.copy_table("src.people", "dst_tmp.people_failed")
+    assert os.listdir(tmp_path) == []
+
+
 def test_live_schema_names_lists_non_system_schemas(client):
     # O5: the only §2a operator without a test until now
     names = cat.schema_names(client)
@@ -200,15 +227,18 @@ def test_live_hotswap_transaction_rolls_back_atomically(client):
     # a failing statement inside execute_transaction must leave NO trace —
     # psql ON_ERROR_STOP exits before COMMIT so the server rolls back
     client.execute("DROP TABLE IF EXISTS src.tx_probe")
-    with pytest.raises(RuntimeError):
+    with pytest.raises(RuntimeError, match="division by zero"):
         client.execute_transaction(
             [
                 "CREATE TABLE src.tx_probe (x INT)",
+                "CREATE INDEX tx_probe_x ON src.tx_probe (x)",
                 "INSERT INTO src.tx_probe VALUES (1)",
                 "SELECT 1/0",  # boom
             ]
         )
+    # the failed session is gone; the next call runs on a fresh one
     assert not cat.table_exists(client, "src", "tx_probe")
+    assert client.fetch("SELECT count(*) FROM pg_class WHERE relname = 'tx_probe_x'") == [(0,)]
 
 
 @pytest.mark.parametrize("transfer", ["copy", "pipe"])
@@ -385,3 +415,111 @@ def test_live_small_table_keeps_single_stream_and_quoting_safe(client):
     assert len(selects) > 1
     counts = [int(client.fetch(f"SELECT COUNT(*) FROM ({s}) q")[0][0]) for s in selects]
     assert sum(counts) == 600, counts
+
+
+# ---------------- the psql session pool (pg/psql_client.py) ----------------
+
+
+def _backend_pid(c: PsqlCliClient) -> int:
+    return c.fetch("SELECT pg_backend_pid()")[0][0]
+
+
+def test_live_session_failure_raises_server_message_then_fresh_session(pg_server):
+    with PsqlCliClient(pg_server) as c:
+        pid = _backend_pid(c)
+        with pytest.raises(RuntimeError, match="division by zero"):
+            c.execute("SELECT 1/0")
+        # the failed session died with its statement; the next call runs
+        # on a new one instead of retrying
+        assert _backend_pid(c) != pid
+        assert c.fetch("SELECT 41 + 1") == [(42,)]
+
+
+def test_live_session_survives_a_flood_of_notices(pg_server):
+    # 20k NOTICE lines overflow any pipe buffer: only the stderr drain
+    # thread keeps psql from blocking on its stderr write
+    with PsqlCliClient(pg_server) as c:
+        c.execute(
+            "DO $$ BEGIN FOR i IN 1..20000 LOOP RAISE NOTICE 'notice %', i; END LOOP; END $$"
+        )
+        assert c.fetch("SELECT 1") == [(1,)]
+
+
+def test_live_sessions_are_reused_and_concurrent_calls_get_their_own(pg_server):
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    with PsqlCliClient(pg_server) as c:
+        assert len({_backend_pid(c) for _ in range(5)}) == 1
+
+        # stress: more threads than cores with frequent switches; a
+        # session handed to two callers at once would cross their output
+        def echo(t):
+            return [c.fetch(f"SELECT {t}, {i}") == [(t, i)] for i in range(50)]
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(16) as pool:
+                futures = [pool.submit(echo, t) for t in range(16)]
+                results = [f.result(timeout=60) for f in futures]
+        finally:
+            sys.setswitchinterval(interval)
+        assert all(all(r) for r in results)
+        assert len(c._idle) <= 16
+
+        barrier = threading.Barrier(8)
+
+        def held_pid(_):
+            barrier.wait(timeout=30)
+            return c.fetch("SELECT pg_backend_pid() FROM pg_sleep(0.3)")[0][0]
+
+        with ThreadPoolExecutor(8) as pool:
+            pids = list(pool.map(held_pid, range(8)))
+        assert len(set(pids)) == 8
+        # idle sessions hold no transaction and no lock
+        others = ", ".join(str(p) for p in pids)
+        busy = c.fetch(
+            "SELECT count(*) FROM pg_stat_activity"
+            f" WHERE pid IN ({others}) AND pid <> pg_backend_pid() AND state <> 'idle'"
+        )
+        locks = c.fetch(
+            f"SELECT count(*) FROM pg_locks WHERE pid IN ({others}) AND pid <> pg_backend_pid()"
+        )
+        assert busy == [(0,)] and locks == [(0,)]
+
+
+def test_live_close_ends_every_psql_child(pg_server):
+    import gc
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    c = PsqlCliClient(pg_server)
+    with ThreadPoolExecutor(4) as pool:
+        list(pool.map(lambda _: c.fetch("SELECT pg_sleep(0.1)"), range(4)))
+    procs = [s.proc for s in c._idle]
+    assert procs
+    c.close()
+    assert all(p.poll() is not None for p in procs)
+    assert c.fetch("SELECT 1") == [(1,)]  # still usable: a new session
+
+    # the garbage-collection finalizer ends idle sessions too
+    procs = [s.proc for s in c._idle]
+    del c
+    gc.collect()
+    deadline = time.time() + 5
+    while any(p.poll() is None for p in procs) and time.time() < deadline:
+        time.sleep(0.05)
+    assert all(p.poll() is not None for p in procs)
+
+
+def test_live_fetch_coerces_values_as_before(client):
+    rows = client.fetch(
+        "SELECT NULL, true, false, 'plain text', '', 42, -7, 2.5, 't'::text, 'f, g'"
+        " UNION ALL SELECT 'x', NULL, NULL, 'a|b', 'c', 0, 0, 0.0, 'u', NULL"
+    )
+    assert rows == [
+        (None, True, False, "plain text", "", 42, -7, 2.5, True, "f, g"),
+        ("x", None, None, "a|b", "c", 0, 0, 0.0, "u", None),
+    ]

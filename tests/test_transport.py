@@ -135,6 +135,33 @@ def test_copy_table_full_sequence():
     assert 'CREATE UNIQUE INDEX "users_email_idx"' in joined
 
 
+def test_index_replay_pk_first_then_secondaries_concurrently():
+    """ADD PRIMARY KEY (ACCESS EXCLUSIVE) runs alone and first; the
+    secondary builds are in flight together; a failed build propagates
+    after the others finish and the created dest table is dropped."""
+    import threading
+
+    both_building = threading.Barrier(2, timeout=10)
+
+    class ReplayClient(FakeClient):
+        def execute(self, sql):
+            if sql.startswith("CREATE") and " INDEX " in sql:
+                both_building.wait()
+                if "users_active_idx" in sql:
+                    raise RuntimeError("index build failed")
+            super().execute(sql)
+
+    src = FakeClient(tables={"public": ["users"]}, columns=COLS, indexes=INDEXES)
+    dest = ReplayClient(tables={"public": []})
+    tr, _, _ = make_transport(src, dest)
+    with pytest.raises(RuntimeError, match="index build failed"):
+        tr.copy_table("public.users")
+    pk = next(i for i, s in enumerate(dest.executed) if "ADD PRIMARY KEY" in s)
+    email = next(i for i, s in enumerate(dest.executed) if "users_email_idx" in s)
+    assert pk < email
+    assert dest.executed[-1] == 'DROP TABLE IF EXISTS "public"."users"'
+
+
 def test_skip_indexes_is_honored():  # Q3
     src = FakeClient(tables={"public": ["users"]}, columns=COLS, indexes=INDEXES)
     dest = FakeClient(tables={"public": []})

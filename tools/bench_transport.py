@@ -148,6 +148,7 @@ FROM generate_series(1, {n_rows}) g(i)"""
         for name, sec in results.items():
             print(f"{name}: {sec:.2f}s  ({n_rows / sec / 1e6:.2f}M rows/s)")
     finally:
+        client.close()
         subprocess.run(as_pg(f"pg_ctl -D {data} -m immediate stop"), capture_output=True)
         shutil.rmtree(root, ignore_errors=True)
 
