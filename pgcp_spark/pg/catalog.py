@@ -10,10 +10,19 @@ reference interpolates raw strings, e.g. postgres.rb:27,152-153,180-183).
   - column_definitions ← postgres.rb:137-167 (O6)
   - get_indexes        ← postgres.rb:169-241 (O10)
   - table_exists       ← postgres.rb:280-284,327-346 (O12)
+
+Queries that return names fetch each row as one JSON array rendered by
+the server (``json_build_array(...)::text``) and decode it here. Names
+thus stay ``str`` whatever they spell: the psql client's ``fetch`` reads
+untyped text and coerces ``t``/``f`` to booleans and digit strings to
+ints, which would turn a column named ``t`` or ``2024`` into a non-name.
+JSON also escapes a newline or field separator inside a name, which
+would otherwise split the psql client's line-oriented output.
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
 from pgcp_spark.pg.client import PgClient
@@ -46,25 +55,25 @@ def list_tables(client: PgClient, schema_name: str) -> list[str]:
     """Base tables of one schema, sorted (postgres.rb:20-36; views are
     excluded by table_type='BASE TABLE', postgres.rb:25)."""
     sql = f"""
-SELECT table_name
+SELECT json_build_array(table_name)::text
 FROM information_schema.tables
 WHERE table_schema = {quote_literal(schema_name)}
   AND table_type = 'BASE TABLE'
-ORDER BY 1
+ORDER BY table_name
 """
-    return [r[0] for r in client.fetch(sql)]
+    return [r[0] for r in _fetch_json(client, sql)]
 
 
 def schema_names(client: PgClient) -> list[str]:
     """Non-system schemas (postgres.rb:108-120)."""
     sql = """
-SELECT schema_name
+SELECT json_build_array(schema_name)::text
 FROM information_schema.schemata
 WHERE schema_name NOT LIKE 'pg\\_%'
   AND schema_name <> 'information_schema'
-ORDER BY 1
+ORDER BY schema_name
 """
-    return [r[0] for r in client.fetch(sql)]
+    return [r[0] for r in _fetch_json(client, sql)]
 
 
 def column_definitions(client: PgClient, schema_name: str, table_name: str) -> list[ColumnDef]:
@@ -72,9 +81,11 @@ def column_definitions(client: PgClient, schema_name: str, table_name: str) -> l
     format_type preserves exact PG types — numeric(p,s), varchar(n),
     arrays, enums — which Spark's JDBC schema would degrade."""
     sql = f"""
-SELECT a.attname,
-       pg_catalog.format_type(a.atttypid, a.atttypmod),
-       a.attnotnull
+SELECT json_build_array(
+         a.attname,
+         pg_catalog.format_type(a.atttypid, a.atttypmod),
+         a.attnotnull
+       )::text
 FROM pg_catalog.pg_attribute a
 JOIN pg_catalog.pg_class c ON a.attrelid = c.oid
 JOIN pg_catalog.pg_namespace n ON c.relnamespace = n.oid
@@ -85,7 +96,8 @@ WHERE n.nspname = {quote_literal(schema_name)}
 ORDER BY a.attnum
 """
     return [
-        ColumnDef(name=r[0], type=r[1], nullable=not _as_bool(r[2])) for r in client.fetch(sql)
+        ColumnDef(name=name, type=type_, nullable=not notnull)
+        for name, type_, notnull in _fetch_json(client, sql)
     ]
 
 
@@ -95,13 +107,14 @@ def get_indexes(client: PgClient, schema_name: str, table_name: str) -> list[Ind
     per attnum, postgres.rb:233). Composite PKs keep ALL columns — the
     reference truncated to the first (postgres.rb:248, SURVEY.md Q5)."""
     sql = f"""
-SELECT i.relname AS index_name,
-       ix.indisunique,
-       ix.indisprimary,
-       pg_catalog.pg_get_expr(ix.indpred, ix.indrelid) AS where_pred,
-       ix.indkey::text,
-       ix.indexrelid::bigint,
-       ix.indnkeyatts
+SELECT json_build_array(
+         i.relname,
+         ix.indisunique,
+         ix.indisprimary,
+         pg_catalog.pg_get_expr(ix.indpred, ix.indrelid),
+         ix.indexrelid::bigint,
+         ix.indnkeyatts
+       )::text
 FROM pg_catalog.pg_class t
 JOIN pg_catalog.pg_namespace n ON t.relnamespace = n.oid
 JOIN pg_catalog.pg_index ix ON t.oid = ix.indrelid
@@ -111,26 +124,18 @@ WHERE n.nspname = {quote_literal(schema_name)}
 ORDER BY i.relname
 """
     indexes = []
-    for name, unique, primary, where, _indkey, index_oid, n_key in client.fetch(sql):
+    for name, unique, primary, where, index_oid, n_key in _fetch_json(client, sql):
         # indnkeyatts, NOT len(indkey): indkey also lists INCLUDE (non-key)
         # columns, and promoting those to key columns on replay would
-        # silently weaken unique constraints
-        n_cols = int(n_key)
-        # one round-trip per index (not per column): expand positions
-        # server-side with generate_series
+        # silently weaken unique constraints. One round-trip per index
+        # (not per column): expand positions server-side with generate_series
         col_sql = f"""
-SELECT g, pg_catalog.pg_get_indexdef({index_oid}, g, true)
-FROM generate_series(1, {n_cols}) AS g ORDER BY g
+SELECT json_build_array(pg_catalog.pg_get_indexdef({index_oid}, g, true))::text
+FROM generate_series(1, {n_key}) AS g ORDER BY g
 """
-        cols = [r[1] for r in client.fetch(col_sql)]
+        cols = [r[0] for r in _fetch_json(client, col_sql)]
         indexes.append(
-            IndexDef(
-                name=name,
-                columns=tuple(cols),
-                unique=_as_bool(unique),
-                primary=_as_bool(primary),
-                where=where,
-            )
+            IndexDef(name=name, columns=tuple(cols), unique=unique, primary=primary, where=where)
         )
     return indexes
 
@@ -158,7 +163,6 @@ def primary_key_columns(client: PgClient, schema_name: str, table_name: str) -> 
     return ()
 
 
-def _as_bool(v) -> bool:
-    if isinstance(v, bool):
-        return v
-    return str(v).lower() in ("t", "true", "1")
+def _fetch_json(client: PgClient, sql: str) -> list[list]:
+    """Run ``sql``, whose rows are one JSON array each; decode them."""
+    return [json.loads(r[0]) for r in client.fetch(sql)]

@@ -13,10 +13,17 @@ reference pipe:
     import runs one ``COPY FROM`` per Spark output part file, both
     through a thread pool. PG happily runs concurrent COPY in both
     directions; the reference moved every row through one pipe.
-  - TYPED: the Spark read schema comes from the source catalog
-    (pg_catalog.format_type), not CSV inference, so numerics keep
-    precision/scale and NULLs stay distinguishable from empty strings via
-    an explicit NULL marker.
+  - TEXT PASSTHROUGH: like the reference pipe, the staged copy carries
+    the exact text the source server printed. The reader scans every
+    column as a Spark string and the destination's ``COPY FROM`` parses
+    it, so no Spark job parses typed values only to format them back.
+    Values a typed Spark parse would lose stay intact: ``timestamptz``
+    offsets, ``numeric 'NaN'``, ``'infinity'`` timestamps, BC and
+    year-10000 dates, and text with an embedded newline (the scan is
+    ``multiLine``). NULL stays distinct from ``''`` through an explicit
+    NULL marker. Trade-off: a ``multiLine`` CSV file cannot be split, so
+    a single-stream export (no usable PK, or a small table) is parsed by
+    one task and loaded by one ``COPY``; partitioned exports are unaffected.
   - FAILURES PROPAGATE: any psql exit ≠ 0 raises (the reference's pipe
     check was broken — ``echo $?`` in a fresh subshell, transport.rb:71-74).
   - NO PER-STATEMENT PROCESS: the staged ``\\copy`` exports and loads are
@@ -94,11 +101,14 @@ def spark_type_for(pg_type: str) -> str:
 
 
 def make_copy_reader(spark, client: PsqlCliClient):
-    """Build a ``Transport`` reader: parallel COPY TO csv → typed Spark scan.
+    """Build a ``Transport`` reader: parallel COPY TO csv → Spark scan of
+    every column as ``string``, the source server's own text.
 
     The scan reads its CSV export lazily, so the export directory lives
     until ``reader.release(df)`` — ``Transport`` calls it once the staged
     write that consumed ``df`` has finished or failed."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
     # id(returned DataFrame) → export directory; single dict operations
     # are atomic, so concurrent glob-copy threads need no lock
     staged: dict[int, str] = {}
@@ -107,7 +117,8 @@ def make_copy_reader(spark, client: PsqlCliClient):
         columns = cat.column_definitions(client, src.schema_name, src.table_name)
         if not columns:
             raise RuntimeError(f"source table {src} has no columns (missing?)")
-        schema = ", ".join(f"`{c.name}` {spark_type_for(c.type)}" for c in columns)
+        # a StructType, not a DDL string: column names need no quoting
+        schema = StructType([StructField(c.name, StringType()) for c in columns])
         selects = _partitioned_selects(client, src, columns, options)
         out_dir = tempfile.mkdtemp(prefix="pgcp_copy_out_")
 
@@ -125,16 +136,11 @@ def make_copy_reader(spark, client: PsqlCliClient):
                 nullValue=_CSV_NULL,
                 emptyValue="",
                 escape='"',  # PG CSV doubles quotes (RFC 4180); Spark defaults to backslash
-                timestampFormat="yyyy-MM-dd HH:mm:ss[.SSSSSS]",
+                multiLine=True,  # a quoted value may hold a newline
             )
         except BaseException:
             shutil.rmtree(out_dir, ignore_errors=True)
             raise
-        from pyspark.sql import functions as F
-
-        for c in columns:
-            if c.type.lower() == "boolean":
-                df = df.withColumn(c.name, F.col(c.name) == "t")
         staged[id(df)] = out_dir
         return df
 

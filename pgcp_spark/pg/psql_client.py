@@ -45,9 +45,11 @@ What sharing a session across calls changes for callers:
 Intended for CATALOG/DDL/metadata statements (the only place transport uses
 ``fetch``); bulk rows move via COPY, never through ``fetch``. Because psql
 output is untyped text, ``fetch`` applies coercion rules (int/float/bool/
-NULL below) that are exact for pg_catalog/information_schema queries and
-MIN/MAX bounds, but would mis-type a user TEXT value that happens to equal
-``t``/``f`` or look numeric — don't use it as a general row reader.
+NULL below) that are exact for counts, flags and MIN/MAX bounds, but would
+mis-type a TEXT value that happens to equal ``t``/``f`` or look numeric —
+don't use it as a general row reader. Catalog names are such values (a
+column may be named ``t``), so catalog.py fetches them as JSON rendered
+by the server.
 """
 
 from __future__ import annotations

@@ -6,8 +6,9 @@ scratch PostgreSQL cluster (initdb + pg_ctl, socket-only, throwaway data
 dir) and drives ``Transport.copy_table`` end-to-end through the
 psql-CLI client (pg/psql_client.py) and the parallel COPY⇄CSV transfer
 seams (pg/copy_csv.py): catalog introspection, exact-type DDL round-trip,
-staged copy, atomic hotswap, index replay, --where pushdown, glob fan-out,
-and failure cleanup — with assertions, which the reference's own live spec
+staged copy (edge values and value-like names included), atomic hotswap,
+index replay, --where pushdown, glob fan-out, and failure cleanup —
+with assertions, which the reference's own live spec
 (/root/reference/spec/transport_spec.rb:3-32) never had. The last tests
 pin the psql client's session pool: failure handling, stderr draining,
 session reuse and concurrency, and ``close()``.
@@ -415,6 +416,81 @@ def test_live_small_table_keeps_single_stream_and_quoting_safe(client):
     assert len(selects) > 1
     counts = [int(client.fetch(f"SELECT COUNT(*) FROM ({s}) q")[0][0]) for s in selects]
     assert sum(counts) == 600, counts
+
+
+def _assert_same_rows(client, a: str, b: str) -> None:
+    """``a`` and ``b`` hold the same multiset of rows, compared by PG."""
+    for x, y in ((a, b), (b, a)):
+        diff = client.fetch(f"SELECT count(*) FROM (TABLE {x} EXCEPT ALL TABLE {y}) d")
+        assert diff == [(0,)], f"{x} EXCEPT ALL {y}"
+
+
+@pytest.mark.parametrize("streams", [{}, {"small_table_rows": 0}], ids=["single", "partitioned"])
+def test_live_csv_copy_round_trips_edge_values(transport, client, streams):
+    """The CSV copy carries PG's own text: values a typed Spark CSV parse
+    turns into NULL (timestamptz with an offset, numeric NaN, infinite
+    timestamps) or rejects (year-10000 dates, text holding a newline)
+    arrive unchanged, on one export stream and on several."""
+    client.execute("DROP TABLE IF EXISTS src.edges")
+    client.execute(
+        "CREATE TABLE src.edges (id INT PRIMARY KEY, tz TIMESTAMPTZ, num NUMERIC,"
+        " f8 FLOAT8, ts TIMESTAMP, d DATE, note TEXT)"
+    )
+    client.execute(
+        """
+INSERT INTO src.edges VALUES
+  (1, '2024-03-10 08:30:00.123456+05:30', 'NaN', 'Infinity', 'infinity',
+   '0044-03-15 BC', E'two\\nlines'),
+  (2, '1999-12-31 23:59:59-08', '-12345678901234567890.1234567890123456789', 'NaN',
+   '-infinity', '10000-01-01', ''),
+  (3, NULL, NULL, '-Infinity', NULL, NULL, NULL),
+  (4, 'infinity', '0.000000000000000000000000000001', -0.5,
+   '2024-02-29 23:59:59.999999', '2024-02-29', E'quote " comma , \\r\\n crlf')"""
+    )
+    # more rows than streams, so the partitioned run really splits
+    client.execute(
+        "INSERT INTO src.edges SELECT i, NULL, i, i, NULL, NULL, 'n' || i"
+        " FROM generate_series(5, 40) g(i)"
+    )
+    client.execute("DROP SCHEMA IF EXISTS dst_edges CASCADE")
+    transport.copy_table(
+        "src.edges", options=CopyOptions(force_schema="dst_edges", num_partitions=4, **streams)
+    )
+    _assert_same_rows(client, "src.edges", "dst_edges.edges")
+
+
+def test_live_catalog_names_that_look_like_values_stay_names(transport, client):
+    """Names the psql client's ``fetch`` would coerce (``t``/``f`` to
+    booleans, digit strings to ints) reach DDL, index replay and the glob
+    as names."""
+    client.execute("DROP SCHEMA IF EXISTS names_src CASCADE")
+    client.execute("CREATE SCHEMA names_src")
+    client.execute(
+        'CREATE TABLE names_src."t" (t INT PRIMARY KEY, f TEXT, "2024" BOOLEAN)'
+    )
+    client.execute('CREATE INDEX "f" ON names_src."t" (f, "2024")')
+    client.execute(
+        "INSERT INTO names_src.t SELECT i, CASE WHEN i % 2 = 0 THEN 't' ELSE 'f' END,"
+        " i % 3 = 0 FROM generate_series(1, 30) g(i)"
+    )
+    assert cat.list_tables(client, "names_src") == ["t"]
+    assert [c.name for c in cat.column_definitions(client, "names_src", "t")] == [
+        "t", "f", "2024",
+    ]
+    client.execute("DROP SCHEMA IF EXISTS names_dst CASCADE")
+    client.execute("DROP SCHEMA IF EXISTS names_glob CASCADE")
+    transport.copy_table("names_src.t", options=CopyOptions(force_schema="names_dst"))
+    assert transport.copy_tables(
+        "names_src.*", options=CopyOptions(force_schema="names_glob")
+    ) == ["t"]
+    for dest in ("names_dst", "names_glob"):
+        _assert_same_rows(client, "names_src.t", f"{dest}.t")
+        assert cat.column_definitions(client, dest, "t") == cat.column_definitions(
+            client, "names_src", "t"
+        )
+        assert {(ix.columns, ix.primary) for ix in cat.get_indexes(client, dest, "t")} == {
+            (("t",), True), (("f", '"2024"'), False),
+        }
 
 
 # ---------------- the psql session pool (pg/psql_client.py) ----------------

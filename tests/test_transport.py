@@ -6,6 +6,7 @@ No live Postgres: the Spark JDBC read/write edges are injected.
 
 from __future__ import annotations
 
+import json
 import re
 
 import pytest
@@ -15,6 +16,10 @@ from pgcp_spark.pg import catalog as cat
 from pgcp_spark.pg import ddl
 from pgcp_spark.qualified_name import QualifiedName
 from pgcp_spark.transport import CopyOptions, Transport
+
+
+def _json_rows(rows) -> list[tuple]:
+    return [(json.dumps(r),) for r in rows]
 
 
 class FakeClient:
@@ -30,6 +35,7 @@ class FakeClient:
         self.transactions: list[list[str]] = []
 
     def fetch(self, sql):
+        # catalog name queries return one server-rendered JSON array per row
         s = " ".join(sql.split())
         if "information_schema.tables" in s and "COUNT(*)" in s:
             m = re.search(r"table_name = '([^']+)'", s)
@@ -38,27 +44,19 @@ class FakeClient:
             return [(1 if exists else 0,)]
         if "information_schema.tables" in s:
             schema = re.search(r"table_schema = '([^']+)'", s).group(1)
-            return [(t,) for t in sorted(self.tables.get(schema, []))]
+            return _json_rows([t] for t in sorted(self.tables.get(schema, [])))
         if "pg_attribute" in s:
-            return [(c.name, c.type, not c.nullable) for c in self.columns]
+            return _json_rows([c.name, c.type, not c.nullable] for c in self.columns)
         if "pg_index" in s and "indisunique" in s:
-            return [
-                (
-                    ix.name,
-                    ix.unique,
-                    ix.primary,
-                    ix.where,
-                    " ".join("1" * len(ix.columns)),
-                    i,
-                    len(ix.columns),
-                )
+            return _json_rows(
+                [ix.name, ix.unique, ix.primary, ix.where, i, len(ix.columns)]
                 for i, ix in enumerate(self.indexes)
-            ]
+            )
         if "pg_get_indexdef" in s:
             m = re.search(r"pg_get_indexdef\((\d+), g", s)
             n = int(re.search(r"generate_series\(1, (\d+)\)", s).group(1))
             ix = self.indexes[int(m.group(1))]
-            return [(pos, ix.columns[pos - 1]) for pos in range(1, n + 1)]
+            return _json_rows([ix.columns[pos - 1]] for pos in range(1, n + 1))
         if "MIN(" in s:
             return [self.pk_bounds]
         raise AssertionError(f"unexpected fetch: {s}")
